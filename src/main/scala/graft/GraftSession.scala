@@ -14,6 +14,17 @@ object GraftSession {
     tuned(SparkSession.builder().master(s"local[$cores]").appName(appName),
           shufflePartitions = cores).getOrCreate()
 
+  /** The entry points' session: `local[$SPARK_GRAFT_CPUS]` (default 32)
+    * with the shuffle width matched, no UI, WARN logs. */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val s = tuned(SparkSession.builder().master(s"local[$cpus]"), cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Apply the engine's config profile to any builder (cluster path:
     * caller sets master/deploy; pass the cluster's total cores so the
     * shuffle width matches the execution width). */

@@ -558,50 +558,65 @@ object ScalingBench {
         case None => panel.map(n => n -> SparkEntry.queries(n)) ++ ScaledPanel
       }
 
-    def runPanel(s: SparkSession): Seq[(String, Double)] =
-      allQueries.map { case (name, fn) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try fn(s, sfDir).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
-        }
+    // A cell that throws is an error on its core count's line, never a
+    // time: it is left out of that line's subtotals, and a cell that
+    // failed at ANY core count is left out of every summary row, so the
+    // speedup/efficiency ratios compare the same panel at each step.
+    def runPanel(s: SparkSession, pass: Int): (Seq[(String, Double)], Map[String, String]) = {
+      val ledger = new graft.Ledger(s)
+      val cells = allQueries.flatMap { case (name, fn) =>
+        def once(): Option[Double] = ledger.time(name, pass)(fn(s, sfDir))
         // Host CPU-steal events on this box last minutes and can hit BOTH
         // runs of a min-of-2 (measured: scaled_pricing 73 s at 2 cores /
         // 175 s at 32 cores for a ~7 s query). When the two runs disagree
         // by >2x the measurement is noise-suspect — take a third and keep
         // the overall min; costs nothing when the box is quiet.
-        val a = once()
-        val b = { s.catalog.clearCache(); once() }
-        val t =
-          if (math.max(a, b) > 2.0 * math.min(a, b))
-            math.min(math.min(a, b), { s.catalog.clearCache(); once() })
-          else math.min(a, b)
-        name -> t
+        for {
+          a <- once()
+          b <- { s.catalog.clearCache(); once() }
+          t <- if (math.max(a, b) > 2.0 * math.min(a, b))
+                 { s.catalog.clearCache(); once() }.map(math.min(math.min(a, b), _))
+               else Some(math.min(a, b))
+        } yield name -> t
       }
+      ledger.detach()
+      val errors = ledger.entries.filterNot(_.ok)
+        .map(e => e.row -> e.error.getOrElse("")).toMap
+      (cells, errors)
+    }
 
     val scaledNames = ScaledPanel.map(_._1).toSet
-    val totals = coreSteps.map { n =>
+    def subtotals(cells: Seq[(String, Double)]): (Double, Double) = {
+      val (scaled, fixture) = cells.partition(c => scaledNames(c._1))
+      (fixture.map(_._2).sum, scaled.map(_._2).sum)
+    }
+    val sweep = coreSteps.map { n =>
       val s = session(n)
-      if (n == coreSteps.head) { runPanel(s); s.catalog.clearCache() } // JIT warm-up, untimed
-      val cells = runPanel(s)
+      if (n == coreSteps.head) { runPanel(s, pass = 0); s.catalog.clearCache() } // JIT warm-up, untimed
+      val (cells, errors) = runPanel(s, pass = 1)
       s.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      val fixture = cells.filterNot(c => scaledNames(c._1)).map(_._2).sum
-      val scaled = cells.filter(c => scaledNames(c._1)).map(_._2).sum
+      val (fixture, scaled) = subtotals(cells)
       val qs = cells.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
-      println(s"""{"metric":"scaling","cores":$n,"fixture_sec":${f"$fixture%.3f"},"scaled_sec":${f"$scaled%.3f"},"queries":$qs,"sf":"$sfDir"}""")
-      (n, fixture, scaled, cells.toMap)
+      val errs = errors.map { case (k, v) =>
+        graft.Ledger.jsonString(k) + ":" + graft.Ledger.jsonString(v) }.mkString("{", ",", "}")
+      println(s"""{"metric":"scaling","cores":$n,"fixture_sec":${f"$fixture%.3f"},"scaled_sec":${f"$scaled%.3f"},"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
+      n -> cells
     }
     val cellsByCores: Map[Int, Map[String, Double]] =
-      totals.map(t => t._1 -> t._4).toMap
+      sweep.map { case (n, cells) => n -> cells.toMap }.toMap
+    val everywhere = cellsByCores.values.map(_.keySet).reduce(_ intersect _)
+    val totals = sweep.map { case (n, cells) =>
+      val (fixture, scaled) = subtotals(cells.filter(c => everywhere(c._1)))
+      (n, fixture, scaled)
+    }
 
     // speedup/efficiency from the compute-scaled subtotal; the fixture
     // subtotal is reported alongside as the per-query latency floor
     val t1 = totals.head._3
-    val rows = totals.map { case (n, fixture, t, _) =>
+    val rows = totals.map { case (n, fixture, t) =>
       val speedup = t1 / t
       s"""{"cores":$n,"scaled_sec":${f"$t%.3f"},"fixture_sec":${f"$fixture%.3f"},"speedup":${f"$speedup%.3f"},"efficiency":${f"${speedup / n}%.3f"}}"""
     }
@@ -628,7 +643,7 @@ object ScalingBench {
       if (serialRows.nonEmpty) s""","serial_table":[${serialRows.mkString(",")}]"""
       else ""
     val summary =
-      s"""{"metric":"scaling_summary","baseline_cores":${totals.head._1},"rows":[${rows.mkString(",")}],"panel":${allQueries.size}$serialJson,"sf":"$sfDir"}"""
+      s"""{"metric":"scaling_summary","baseline_cores":${totals.head._1},"rows":[${rows.mkString(",")}],"panel":${allQueries.size},"n_failed":${allQueries.size - everywhere.size}$serialJson,"sf":"$sfDir"}"""
     println(summary)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("scaling_sweep.json"), summary.getBytes("UTF-8"))

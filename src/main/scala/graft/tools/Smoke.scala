@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Queries, SparkEntry}
 import graft.sources.Tables
 
@@ -9,11 +8,7 @@ import graft.sources.Tables
 object Smoke {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.GraftSession.tuned(
-        SparkSession.builder().master("local[8]"), 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv()
     Tables.all.foreach { t =>
       try {
         val df = Tables.load(spark, dir, t)
