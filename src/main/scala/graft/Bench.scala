@@ -1,9 +1,10 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** Ledger rows of the shared-frame prewarm: one per pin, plus one per
-    * family's frame construction (`_pin:_build_<family>`: eager size
-    * probes run there, before any pin materializes). */
+  /** Ledger rows of the shared-frame prewarm: one per frame's
+    * materialization (`_pin:<name>`), plus one per frame's construction
+    * (`_pin:_build_<name>`: eager size probes run there, before any
+    * frame materializes). */
   private[graft] val PinPrefix = "_pin:"
 
   /** Per-pass seconds of every registry row from the ledger: the min of
@@ -19,6 +20,36 @@ object Bench {
     val passes = (1 to nRuns).map(p =>
       timed.filter(_.pass == p).groupMapReduce(_.row)(_.wall_s)(math.min))
     (passes, failed)
+  }
+
+  /** Shared-frame prewarm, timed as its own `_shared_frames` line: each
+    * declared frame ([[graft.queries.SharedFrames]]) feeds 2-8 rows, and
+    * after a cache clear its build used to land on whichever consumer
+    * ran first (10x per-row jumps while family totals stayed flat).
+    * Construction (persist + eager size probes) is sequential in
+    * declaration order, which is dependency order. Materialization is
+    * concurrent (VERDICT r11 #4): builds are exchange-barrier-bound, and
+    * racing builds share uncached subtrees at the BlockManager's
+    * per-block compute lock. Heaviest first by the `_pin:<name>` seconds
+    * this run has recorded; the first prewarm has none and keeps
+    * declaration order. */
+  private[graft] def prewarm(spark: SparkSession, sfDir: String,
+      ledger: Ledger, pass: Int, retry: Boolean): Unit = {
+    val frames = graft.queries.SharedFrames.frames.flatMap { case (name, build) =>
+      ledger.construct(s"${PinPrefix}_build_$name", pass, retry)(
+        graft.operators.PlanCache.reuse(build(spark, sfDir))).map(name -> _)
+    }
+    val seconds = ledger.entries.filter(_.ok)
+      .groupMapReduce(_.row)(_.wall_s)(math.max)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    try {
+      frames.sortBy { case (n, _) => -seconds.getOrElse(PinPrefix + n, 0.0) }
+        .map { case (name, df) =>
+          pool.submit(new Runnable {
+            def run(): Unit = { ledger.time(PinPrefix + name, pass, retry)(df); () }
+          })
+        }.foreach(_.get())
+    } finally pool.shutdown()
   }
 
   def main(args: Array[String]): Unit = {
@@ -68,11 +99,6 @@ object Bench {
         ledger.time(name, pass = 0)(fn(spark, warmupDir))
       }
       spark.catalog.clearCache() // drop warm-up persisted intermediates
-      // pair EVERY clearCache with pruneStale (the retry path always
-      // did; this one didn't until r14): the warm-up's reuse() entries
-      // stay queued after the clear, and their delayed FIFO eviction
-      // during pass 1 uncaches BY PLAN — killing any pin that re-cached
-      // the same plan (the ~8 s rel_kll_* pass-1 phantom, r12-r14)
       graft.operators.PlanCache.pruneStale()
       // absorb the post-warm-up cliff OUTSIDE any query's timing: freeing
       // ~90 queries' caches leaves a major-GC debt + JIT churn that
@@ -82,76 +108,13 @@ object Bench {
       spark.range(50000000L).selectExpr("sum(id)").collect()
     }
     graft.operators.PlanCache.resetStats()
-    // Shared-frame prewarm, explicitly timed as its own line: the
-    // dedup/doc and sim families' bottom-level frames (sketches, pair
-    // tables, trained quantizer, brute-force truth) are CacheManager-
-    // shared across 2-8 queries each, so after a cache clear their build
-    // cost used to land on whichever family member ran first (measured
-    // 10x per-query history jumps while family totals stayed flat).
-    // Pinning them here makes every family timing steady-state; the
-    // build cost still counts — in this labeled entry. Per-pin and
-    // per-family-construction attribution lives in the ledger
-    // (VERDICT r11 #4: the prewarm line grew to the single most
-    // expensive bench entry with no per-pin data to decide the next pin).
-    def prewarm(pass: Int, retry: Boolean): Unit = {
-      val families = Seq(
-        "doc" -> graft.queries.DocQueries.prewarmSharedFrames _,
-        "vec" -> graft.queries.VectorQueries.prewarmSharedFrames _,
-        "rel" -> graft.queries.RelationalQueries.prewarmSharedFrames _,
-        "evt" -> graft.queries.EventQueries.prewarmSharedFrames _)
-      val frames = families.flatMap { case (tag, f) =>
-        ledger.construct(s"${PinPrefix}_build_$tag", pass, retry)(
-          f(spark, sfDir)).getOrElse(Seq.empty)
-      }
-      // Materialize pins CONCURRENTLY (VERDICT r11 #4: a serial prewarm
-      // tripled on a 32-core host). Each pin build is
-      // exchange-barrier-bound, not CPU-bound — a single build leaves
-      // most of the 32 cores idle between its Spark-driver round-trips
-      // — so overlapping them recovers real wall-clock (measured:
-      // 24.4 s sequential → parallel below). Safe: plan CONSTRUCTION
-      // above stays sequential (deterministic sameResult wiring); shared uncached
-      // subtrees dedup at the BlockManager's per-block compute lock,
-      // so two pins racing into one subtree never compute it twice.
-      // Per-pin seconds are wall-clock under overlap — still the
-      // right signal for "is this pin worth its build".
-      // Heavy-first (LPT) submission order (VERDICT r15 #2): the pool
-      // previously materialized pins in family-declaration order, so
-      // the most expensive builds (the KLL stream, the LPA loop — rel
-      // family, declared LAST) only started after ~18 cheap tasks
-      // drained, and the prewarm wall was their tail. Weights are
-      // SEQUENTIAL cold builds observed at sf0.1 before the pool
-      // existed (a pin's `_pin:<name>` ledger rows now carry its build
-      // under overlap) — scheduling hints only: an unknown/new pin
-      // defaults to 1.0 and merely starts later; correctness and the
-      // timing methodology are unchanged. Dependent pins (kll_estimates
-      // after kll_shared, power_iter_v after gram_state, lpa after
-      // co_purchase_edges) dedup at the BlockManager's per-block
-      // compute lock, so starting a consumer early never duplicates
-      // its producer's work — it just parks a pool thread.
-      val prewarmWeight = Map(
-        "kll_shared" -> 9.0, "lpa_labels" -> 7.0, "trigram_scored" -> 4.2,
-        "bm25_scored" -> 3.7, "jaccard_pairs" -> 2.9, "co_ship_edges" -> 2.7,
-        "gram_state" -> 2.6, "gopher_grams" -> 2.5, "sim_kmeans_cells" -> 2.1,
-        "simhash_pairs" -> 1.9, "kll_estimates" -> 1.8, "power_iter_v" -> 1.7,
-        "winnow_fps" -> 1.5, "ttr_segmental" -> 1.5, "char_entropy" -> 1.4,
-        "transition_edges" -> 1.4, "minhash_sigs" -> 1.1)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-      try {
-        frames.sortBy { case (n, _) => -prewarmWeight.getOrElse(n, 1.0) }
-          .map { case (name, df) =>
-          pool.submit(new Runnable {
-            def run(): Unit = { ledger.time(PinPrefix + name, pass, retry)(df); () }
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-    }
     // One timing pass over the registry: timed prewarm + first pass +
     // outlier retries. Host CPU-steal bursts spike individual queries
     // 5-10x over their steady state (measured: same query 1.5s and 12.4s
     // within one JVM, box otherwise idle); re-time >5s outliers once and
     // keep the min. clearCache first on retry: the first run may have
     // persisted its own intermediates, and a cache-warm retry would
-    // understate real cost — but re-prewarm the pinned shared frames
+    // understate real cost — but re-prewarm the shared frames
     // UNTIMED afterwards, or the retry pays a rebuild its steady state
     // never sees. Returns the prewarm's seconds, if it ran.
     val RetryOverSec = 5.0
@@ -159,7 +122,7 @@ object Bench {
       val shared =
         if (only.isEmpty) {
           val t0 = System.nanoTime()
-          prewarm(pass, retry = false)
+          prewarm(spark, sfDir, ledger, pass, retry = false)
           Some((System.nanoTime() - t0) / 1e9)
         } else None
       val firstPass = selected.map { case (name, fn) =>
@@ -168,7 +131,7 @@ object Bench {
         if (t.exists(_ > RetryOverSec)) {
           spark.catalog.clearCache()
           graft.operators.PlanCache.pruneStale()
-          if (only.isEmpty) prewarm(pass, retry = true)
+          if (only.isEmpty) prewarm(spark, sfDir, ledger, pass, retry = true)
           ledger.time(name, pass, retry = true)(fn(spark, sfDir))
         }
       }
@@ -187,11 +150,13 @@ object Bench {
     // stop() drains the listener bus, so every ledger entry read below
     // carries its complete job/stage/task counts. Teardown must never
     // eat the contract: if stop() throws, a last-line JSON parse would
-    // see a stack trace (ADVICE r9)
+    // see a stack trace (ADVICE r9) — so report it on stderr instead
     try {
       spark.sparkContext.setLogLevel("ERROR")
       spark.stop()
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] spark.stop() failed: $e")
+    }
     val entries = ledger.entries
     val (rowPasses, failed) = tally(entries, nRuns)
     val passes = rowPasses.zip(sharedByPass).map { case (rows, shared) =>
@@ -237,7 +202,11 @@ object Bench {
       val ledgerJson = entries.map(_.json).mkString("[\n", ",\n", "\n]")
       java.nio.file.Files.write(p,
         s"{$detail,\"ledger\":$ledgerJson}".getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable =>
+        System.err.println(
+          s"[bench] writing bench_detail.json failed; the file on disk is stale or incomplete: $e")
+    }
     // Contract line LAST and compact: the harness keeps only the final
     // ~2000 chars of output, and a 134-entry queries map (~5 KB) gets
     // its opening brace truncated away — so the parseable line carries

@@ -24,9 +24,8 @@ object Dedup {
     * upstream pipeline per reference (no exchange to reuse under a
     * broadcast join). At production scale the equivalent is a
     * materialized stage (write to a bucketed table); in-process,
-    * MEMORY_AND_DISK persist expresses the same reuse — with a bounded
-    * FIFO lifecycle ([[PlanCache]]: oldest entries unpersist past the
-    * cap, `PlanCache.releaseAll()` for teardown). Idempotent on
+    * MEMORY_AND_DISK persist expresses the same reuse ([[PlanCache]],
+    * `PlanCache.releaseAll()` for teardown). Idempotent on
     * already-cached plans (dupClusters re-marks its pair table). */
   private def reused(df: DataFrame): DataFrame = PlanCache.reuse(df)
 
@@ -137,26 +136,12 @@ object Dedup {
     * shingle-based operator in a session materializes the explode (the
     * family's dominant cost — an interpreted-lambda transform over every
     * document) exactly once. */
-  private def shingleSet(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def shingleSet(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int): DataFrame =
     reused(graft.sources.Tables.spread(df).select(
       col(idCol),
       explode(array_distinct(TextOps.wordShingles(col(textCol), shingleN)))
         .as("shingle")))
-
-  /** The text-dedup family's bottom-level shared sketches (shingle set,
-    * MinHash signatures, SimHash sketch) at the registry-default
-    * parameters, PINNED against PlanCache eviction. Benchmarks
-    * materialize these as one explicitly-timed line so the build cost
-    * stops landing on whichever family query happens to run first —
-    * per-query timings then measure each operator's own work.
-    * CacheManager's sameResult dedup makes every later same-plan build
-    * hit the pinned cache; [[PlanCache.releaseAll]] releases the pins. */
-  def prewarmSharedSketches(df: DataFrame, idCol: String,
-                            textCol: String): Seq[(String, DataFrame)] = Seq(
-    "shingle_set"  -> PlanCache.pin(shingleSet(df, idCol, textCol, 3)),
-    "minhash_sigs" -> PlanCache.pin(minHashSignatures(df, idCol, textCol, 3, 12)),
-    "simhash"      -> PlanCache.pin(simHashSketch(df, idCol, textCol)))
 
   /** Symmetric Jaccard near-dup pairs over distinct shingle sets via an
     * inverted-index self-join (stop-shingle capped). NOT a lazy plan
@@ -334,7 +319,7 @@ object Dedup {
     * (small) doc→value map on each side. */
   /** The (id, simhash) sketch — [[simHashPairs]]' shared base, built
     * through ONE helper so prewarm and query produce the same plan. */
-  private def simHashSketch(df: DataFrame, idCol: String,
+  private[graft] def simHashSketch(df: DataFrame, idCol: String,
                             textCol: String): DataFrame =
     reused(graft.sources.Tables.spread(df)
       .select(col(idCol), TextOps.simHash(col(textCol)).as("sh")))

@@ -492,7 +492,7 @@ object TextOps {
   /** The corpus-scale half of BPE training: the word-frequency table
     * with each word pre-split into space-joined symbols. ONE shuffle
     * over the corpus; everything after is vocab-bound. Exposed so the
-    * bench prewarm can pin it — `text_bpe_merges` and `text_bpe_encode`
+    * bench prewarm can share it — `text_bpe_merges` and `text_bpe_encode`
     * both train from this exact frame (CacheManager sameResult). */
   def bpeWordFreq(df: org.apache.spark.sql.DataFrame,
                   textCol: String): org.apache.spark.sql.DataFrame =

@@ -26,7 +26,7 @@ object AnalyticsQueries {
 
   /** Cache a small intermediate referenced from two plan branches (the
     * second reference would otherwise re-run the full upstream
-    * aggregation — same contract as Dedup.reused, same bounded
+    * aggregation — same contract as Dedup.reused, same
     * [[graft.operators.PlanCache]] lifecycle). */
   private def reused(df: DataFrame): DataFrame =
     graft.operators.PlanCache.reuse(df)

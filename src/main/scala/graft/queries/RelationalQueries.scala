@@ -712,7 +712,7 @@ object RelationalQueries {
 
   /** The [[triangleCount]] supplier co-shipping edge list: suppliers
     * adjacent when they ship the same part on the same day. */
-  private def coShipEdges(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def coShipEdges(s: SparkSession, dir: String): DataFrame = {
     val ps = Tables.lineitem(s, dir)
       .select(col("l_partkey"), col("l_shipdate"), col("l_suppkey")).distinct()
     ps.select(col("l_partkey"), col("l_shipdate"), col("l_suppkey").as("sa"))
@@ -1140,7 +1140,7 @@ object RelationalQueries {
     * is MATERIALIZED (round-7 DuckDB inlining gotcha). */
   /** The [[relKCore]] co-purchase edge list (parts co-ordered with
     * quantity > 40, a < b), shared by the LPA/modularity rows. */
-  private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir).filter(col("l_quantity") > 40)
       .select(col("l_orderkey"), col("l_partkey"))
     val l1 = li.select(col("l_orderkey"), col("l_partkey").as("a"))
@@ -1478,37 +1478,6 @@ object RelationalQueries {
       .filter(col("rank") > 0)
       .select(col("node").as("part_node"), col("rank"))
   }
-
-  /** The graph family's cross-query shared frames, PINNED for the
-    * bench's explicitly-timed `_shared_frames` line (VERDICT r10 #1 —
-    * the 7-query graph family rebuilt its edge lists per query, and
-    * `rel_modularity` re-ran the entire 4-round LPA that
-    * `rel_label_prop` had just run, because the per-round
-    * `localCheckpoint` made CacheManager `sameResult` structurally
-    * impossible). With [[Graphs.labelPropagation]] now persisting per
-    * round ([[PlanCache.reuse]], logical plan kept), pinning the
-    * trained label frame here makes both consumers — and every
-    * co-purchase/co-ship edge subtree (`rel_kcore`,
-    * `rel_link_predict`, `rel_ppr_seeds`'s pre-weight join,
-    * `rel_triangle_count`, `rel_clustering_coeff`) — a cache hit at
-    * whatever subtree matches. */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = Seq(
-    "co_purchase_edges" -> PlanCache.pin(coPurchaseEdges(s, dir)),
-    "co_ship_edges"     -> PlanCache.pin(coShipEdges(s, dir)),
-    "lpa_labels"        -> PlanCache.pin(
-      Graphs.labelPropagation(coPurchaseEdges(s, dir), "a", "b", rounds = 4)),
-    // ONE shared KLL leveled stream (r16): the par-sharded and
-    // flag-grouped frames are projections of this pinned build — the
-    // two separate ~6/9 s pins it replaces were near-duplicate md5 +
-    // explode passes over lineitem (see kllLevShared)
-    "kll_shared"      -> PlanCache.pin(kllLevShared(s, dir)),
-    // the 5-row estimate frame (2 consumers: rel_kll_quantiles +
-    // rel_kll_error's broadcast side) — its build pays the survivor
-    // windows over the leveled stream; unpinned, that cost landed on
-    // rel_kll_error (alphabetically first) and read ~8 s pass-1 on the
-    // driver box (BENCH_r13 retried map; VERDICT r13 #1)
-    "kll_estimates"   -> PlanCache.pin(kllQuantilesQuery(s, dir)))
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     "rel_ppr_seeds"         -> (relPprSeeds _),

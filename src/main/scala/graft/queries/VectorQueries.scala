@@ -14,9 +14,9 @@ import graft.sources.Tables
   */
 object VectorQueries {
 
-  private val Dims = 64
+  private[queries] val Dims = 64
   private val QueryPredSql = "vec_id < 16"
-  private def queryPred = col("vec_id") < 16
+  private[queries] def queryPred = col("vec_id") < 16
 
   // --------------------------------------------------------- SQL builders
 
@@ -29,7 +29,7 @@ object VectorQueries {
     (1 to k).map(i => s"CAST($a[$i] AS DOUBLE)*$b[$i]").mkString(" + ")
 
   /** PQ layout constants — single source for Spark call + oracle SQL. */
-  private val PqM = 4
+  private[queries] val PqM = 4
   private val PqSubDims = Dims / PqM
 
   /** Ordered L2 over one subspace: explicit left-associated sum, the SQL
@@ -507,8 +507,8 @@ object VectorQueries {
     * residual footprint OOM'd whichever sim oracle ran next, two rounds
     * running). Seeding + one update already exercises the full
     * train/assign/probe path; the recall row keeps measuring quality. */
-  private val KmC = 8
-  private val KmIters = 1
+  private[queries] val KmC = 8
+  private[queries] val KmIters = 1
 
   /** IVF top-3 over TRAINED coarse cells: deterministic spherical
     * k-means (md5-seeded init, cosine argmax assignment, median-centroid
@@ -791,38 +791,6 @@ object VectorQueries {
       .select(col("cell"), col("n_bench"),
               coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
               coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
-  }
-
-  /** The sim family's cross-query shared frames, PINNED for the bench's
-    * explicitly-timed `_shared_frames` line: the brute-force truth@3
-    * (left side of all five recall rows), the trained k-means quantizer
-    * (`sim_topk_ivf_trained`, `sim_ivf_trained_recall`,
-    * `sim_semantic_dedup`), and the PQ codebook (`sim_topk_ivfpq`,
-    * `sim_ivfpq_recall`). Same rationale as
-    * [[DocQueries.prewarmSharedFrames]] — attribution, not speed: the
-    * shared build cost lands in one labeled line instead of whichever
-    * family member runs first. */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = {
-    VectorFunctions.register(s)
-    val emb = Tables.embeddings(s, dir)
-    Seq(
-      "sim_brute_truth3" -> graft.operators.PlanCache.pin(
-        Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryPred, 3)),
-      "sim_kmeans_cells" -> graft.operators.PlanCache.pin(
-        Similarity.kmeansCells(emb, "vec_id", "embedding", KmC, KmIters)),
-      "sim_pq_codebook" -> graft.operators.PlanCache.pin(
-        Similarity.pqCodebook(emb, "embedding", "label", PqM, Dims)),
-      // consumed by sim_aniso_energy (alphabetically FIRST in the
-      // family, so it was absorbing the whole Gram + power-iteration
-      // build: 3.26 s) AND sim_power_iter / sim_gram_matrix /
-      // sim_corr_matrix. gramState must be pinned in its own right:
-      // powerIteration only reuse()s it, and ~180 queries of FIFO churn
-      // sit between this prewarm and the sim_* family.
-      "gram_state" -> graft.operators.PlanCache.pin(
-        Similarity.gramState(emb, "vec_id", "embedding")),
-      "power_iter_v" -> graft.operators.PlanCache.pin(
-        Similarity.powerIteration(emb, "vec_id", "embedding", 3)))
   }
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -229,18 +229,18 @@ object StreamOps {
                           term: DataFrame)
                          (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // PIN (not reuse) the frozen model: nbClassify PlanCache.reuse()s
-    // each batch's scored frame, and after ~MaxLive batches the FIFO
-    // would evict (and unpersist) reuse()d model frames — every later
-    // batch then silently re-runs the full training aggregation. Pinned
-    // frames are exempt until releaseAll (ADVICE r11).
-    graft.operators.PlanCache.pin(params)
-    graft.operators.PlanCache.pin(term)
+    // The frozen model is cached outside any scope, so it lives until
+    // releaseAll; each batch's scored frame (nbClassify reuse()s it) is
+    // batch-only and released when the batch's scope ends.
+    graft.operators.PlanCache.reuse(params)
+    graft.operators.PlanCache.reuse(term)
     newDocs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.queries.DocQueries.nbClassify(batch, params, term),
-             batchId)
+        graft.operators.PlanCache.scoped {
+          sink(graft.queries.DocQueries.nbClassify(batch, params, term),
+               batchId)
+        }
       }
       .start()
   }
@@ -250,24 +250,25 @@ object StreamOps {
     * trained logistic-regression weights
     * ([[graft.operators.LogReg.score]]) — the admission filter a live
     * ingestion pipeline runs with a model trained offline. State is
-    * EXTERNAL (the (B+1)-row weight table, pinned like the NB model:
-    * FIFO eviction after ~MaxLive batches would silently retrain per
-    * batch); scoring is per-doc independent, so the union of streamed
-    * outputs equals one batch [[graft.operators.LogReg.score]] over
-    * the same docs for ANY micro-batch partitioning (StreamingSpec
-    * pins this). */
+    * EXTERNAL (the (B+1)-row weight table, cached outside the batch
+    * scope like the NB model, so it lives until releaseAll); scoring
+    * is per-doc independent, so the union of streamed outputs equals
+    * one batch [[graft.operators.LogReg.score]] over the same docs for
+    * ANY micro-batch partitioning (StreamingSpec pins this). */
   def lrScoreGateBatch(newDocs: DataFrame, weights: DataFrame)
                       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.PlanCache.pin(weights)
+    graft.operators.PlanCache.reuse(weights)
     newDocs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.LogReg.score(
-               graft.operators.LogReg.features(
-                 batch, "doc_id", "text", col("lang") === "en"),
-               weights),
-             batchId)
+        graft.operators.PlanCache.scoped {
+          sink(graft.operators.LogReg.score(
+                 graft.operators.LogReg.features(
+                   batch, "doc_id", "text", col("lang") === "en"),
+                 weights),
+               batchId)
+        }
       }
       .start()
   }

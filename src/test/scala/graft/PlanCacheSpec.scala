@@ -3,93 +3,22 @@ package graft
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.PlanCache
+import graft.queries.SharedFrames
 
-/** Lifecycle contract of the plan-reuse persist registry: bounded live
-  * set (FIFO past the cap), idempotence on cached plans, full release. */
+/** Lifecycle contract of the plan-reuse persist registry: idempotence on
+  * cached plans, scoped release, full release — and the declared shared
+  * frames Bench prewarms through it. */
 class PlanCacheSpec extends SparkSpec {
-
-  test("live persists are bounded: oldest unpersists past the cap") {
-    PlanCache.releaseAll()
-    val frames = (0 until PlanCache.MaxLive + 4)
-      .map(i => spark.range(i, i + 100).toDF())
-    frames.foreach(PlanCache.reuse)
-    assert(PlanCache.liveCount <= PlanCache.MaxLive,
-      s"cap breached: ${PlanCache.liveCount}")
-    // the first-inserted frames were evicted, the newest are still live
-    assert(frames.head.storageLevel == StorageLevel.NONE,
-      "oldest entry must have been unpersisted (FIFO)")
-    assert(frames.last.storageLevel != StorageLevel.NONE,
-      "newest entry must still be persisted")
-  }
-
-  test("pinned frames are exempt from eviction until releaseAll") {
-    PlanCache.releaseAll()
-    val pinned = PlanCache.pin(PlanCache.reuse(spark.range(9000, 9100).toDF()))
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 100).toDF()))
-    assert(pinned.storageLevel != StorageLevel.NONE,
-      "pin must survive a full LRU churn")
-    PlanCache.releaseAll()
-    assert(pinned.storageLevel == StorageLevel.NONE,
-      "releaseAll must release pins too")
-  }
-
-  test("evicting a stale same-plan entry never uncaches a pin (r14 bug)") {
-    PlanCache.releaseAll()
-    // a tracked entry left STALE by an external clearCache without
-    // pruneStale — the state Bench's warm-up used to leave behind
-    val stale = PlanCache.reuse(spark.range(7777, 7877).toDF())
-    spark.catalog.clearCache()
-    // the same PLAN re-cached through a fresh instance, then pinned
-    val pin = PlanCache.pin(PlanCache.reuse(spark.range(7777, 7877).toDF()))
-    assert(pin.storageLevel != StorageLevel.NONE)
-    assert(stale.storageLevel != StorageLevel.NONE,
-      "by-plan lookup sees the pin's cache through the stale instance")
-    // churn the queue past the cap so the stale entry is FIFO-evicted:
-    // unpersist() removes cached data BY PLAN, so without the pinned-
-    // plan guard this eviction silently killed the pin mid-bench-pass
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 50).toDF()))
-    assert(pin.storageLevel != StorageLevel.NONE,
-      "stale same-plan eviction must not uncache the pin")
-    PlanCache.releaseAll()
-  }
-
-  test("accepted residual: stale pin over a re-cached plan blocks " +
-       "eviction until releaseAll (r15 guard)") {
-    PlanCache.releaseAll()
-    // a pin left STALE by an external clearCache without pruneStale...
-    val stalePin = PlanCache.pin(spark.range(6600, 6700).toDF())
-    spark.catalog.clearCache()
-    assert(stalePin.storageLevel == StorageLevel.NONE)
-    // ...whose plan a later reuse() RE-CACHED: by-plan storageLevel now
-    // reads live through the stale pin instance, so the two are
-    // indistinguishable and the eviction guard must err on the side of
-    // the r14 bug class (never unpersist through a possibly-live pin)
-    val recached = PlanCache.reuse(spark.range(6600, 6700).toDF())
-    assert(stalePin.storageLevel != StorageLevel.NONE)
-    val skipsBefore = PlanCache.stats("pin_skips")
-    // churn the queue so `recached` is FIFO-dequeued: the guard must
-    // SKIP it (pin_skips, not evictions) and leave the plan persisted —
-    // the accepted one-frame leak, reclaimed by releaseAll
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 50).toDF()))
-    assert(PlanCache.stats("pin_skips") > skipsBefore,
-      "the dequeue must be counted as a pin-protected skip")
-    assert(recached.storageLevel != StorageLevel.NONE,
-      "the re-cached plan must survive the dequeue (guard blocks)")
-    PlanCache.releaseAll()
-    assert(recached.storageLevel == StorageLevel.NONE,
-      "releaseAll reclaims the accepted residual")
-  }
+  private val dir = "/root/testdata/sf0.001"
 
   test("reuse is idempotent on already-cached plans") {
     PlanCache.releaseAll()
     val df = spark.range(0, 50).toDF()
     PlanCache.reuse(df)
-    val n = PlanCache.liveCount
-    PlanCache.reuse(df) // same (now cached) plan — must not re-enqueue
-    assert(PlanCache.liveCount == n)
+    val n = PlanCache.stats("live")
+    PlanCache.reuse(df) // same (now cached) plan — must not re-track
+    PlanCache.reuse(spark.range(0, 50).toDF()) // same plan, new instance
+    assert(PlanCache.stats("live") == n)
     PlanCache.releaseAll()
   }
 
@@ -97,9 +26,59 @@ class PlanCacheSpec extends SparkSpec {
     PlanCache.releaseAll()
     val dfs = (0 until 3).map(i => spark.range(i * 7, i * 7 + 10).toDF())
     dfs.foreach(PlanCache.reuse)
-    assert(PlanCache.liveCount == 3)
+    assert(PlanCache.stats("live") == 3)
     PlanCache.releaseAll()
-    assert(PlanCache.liveCount == 0)
+    assert(PlanCache.stats("live") == 0)
     assert(dfs.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("scoped releases the frames persisted inside it; earlier ones survive") {
+    PlanCache.releaseAll()
+    PlanCache.resetStats()
+    val before = PlanCache.reuse(spark.range(5000, 5100).toDF())
+    val (inner, hit) = PlanCache.scoped {
+      val inner = PlanCache.reuse(spark.range(5200, 5300).toDF())
+      val hit = PlanCache.reuse(spark.range(5000, 5100).toDF())
+      assert(inner.storageLevel != StorageLevel.NONE)
+      assert(PlanCache.stats("live") == 2)
+      (inner, hit)
+    }
+    assert(inner.storageLevel == StorageLevel.NONE,
+      "a frame persisted inside the scope is released at its end")
+    assert(before.storageLevel != StorageLevel.NONE &&
+           hit.storageLevel != StorageLevel.NONE,
+      "a frame cached before the scope, and hit inside it, survives")
+    assert(PlanCache.stats("live") == 1)
+    assert(PlanCache.stats("live_max") == 2)
+    PlanCache.releaseAll()
+  }
+
+  test("declared shared frames: unique names") {
+    val names = SharedFrames.frames.map(_._1)
+    assert(names.distinct == names, names.diff(names.distinct))
+  }
+
+  test("one prewarm persists every declared frame; rebuilding them misses nothing") {
+    PlanCache.releaseAll()
+    val ledger = new Ledger(spark)
+    try Bench.prewarm(spark, dir, ledger, pass = 1, retry = false)
+    finally ledger.detach()
+    val rows = ledger.entries
+    assert(rows.forall(_.ok), rows.filterNot(_.ok).map(e => e.row -> e.error))
+    SharedFrames.frames.foreach { case (name, _) =>
+      assert(rows.exists(_.row == s"${Bench.PinPrefix}_build_$name"), name)
+      assert(rows.exists(_.row == Bench.PinPrefix + name), name)
+    }
+    // constructing the list a second time: every plan is already cached
+    val misses = PlanCache.stats("misses")
+    val again = SharedFrames.frames.map { case (name, build) =>
+      name -> PlanCache.reuse(build(spark, dir))
+    }
+    again.foreach { case (name, df) =>
+      assert(df.storageLevel != StorageLevel.NONE, s"$name is not cached")
+    }
+    assert(PlanCache.stats("misses") == misses,
+      "a rebuilt shared frame issued a new persist")
+    PlanCache.releaseAll()
   }
 }

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for operator specs. */
+/** Shared local session for operator specs. Each suite releases the
+  * PlanCache frames it left, so the next suite starts with none (the
+  * session itself is shared across suites). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  override def afterAll(): Unit = () // session shared across suites
+  override def afterAll(): Unit = graft.operators.PlanCache.releaseAll()
 }
 
 object SparkSpec {

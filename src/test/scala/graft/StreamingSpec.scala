@@ -315,6 +315,42 @@ class StreamingSpec extends SparkSpec {
     graft.operators.PlanCache.releaseAll()
   }
 
+  test("streaming NB and LR gates release each micro-batch's frames") {
+    implicit val sq = spark.sqlContext
+    import graft.queries.DocQueries
+    import graft.operators.{LogReg, PlanCache}
+    PlanCache.releaseAll()
+    val (params, term) = DocQueries.nbModel(Seq(
+      (0L, "aa aa aa", "A"), (4L, "bb bb bb", "B")).toDF("doc_id", "text", "lang"))
+    val w = LogReg.train(LogReg.features(Seq(
+        (0L, "en", "aa bb aa bb"), (4L, "fr", "cc dd cc dd"))
+      .toDF("doc_id", "lang", "text"), "doc_id", "text", $"lang" === "en"))
+    val nbIn = MemoryStream[(Long, String)]
+    val lrIn = MemoryStream[(Long, String, String)]
+    val seen = new java.util.concurrent.atomic.AtomicLong
+    val nb = StreamOps.nbClassifyGateBatch(
+        nbIn.toDF().toDF("doc_id", "text"), params, term) { (df, _) =>
+      seen.addAndGet(df.count()); ()
+    }
+    val lr = StreamOps.lrScoreGateBatch(
+        lrIn.toDF().toDF("doc_id", "lang", "text"), w) { (df, _) =>
+      seen.addAndGet(df.count()); ()
+    }
+    // the gates have registered their frozen models; no batch has run
+    val live0 = PlanCache.stats("live")
+    try {
+      Seq((10L, "en", "aa bb aa"), (11L, "fr", "cc dd cc"), (12L, "en", "aa dd"))
+        .foreach { case (id, lang, text) =>
+          nbIn.addData((id, text)); nb.processAllAvailable()
+          lrIn.addData((id, lang, text)); lr.processAllAvailable()
+          assert(PlanCache.stats("live") == live0,
+            s"batch $id left frames tracked")
+        }
+    } finally { nb.stop(); lr.stop() }
+    assert(seen.get == 6L, "every batch reached its sink")
+    PlanCache.releaseAll()
+  }
+
   test("streaming PII gate equals one batch scan+redact") {
     implicit val sq = spark.sqlContext
     import graft.queries.PiiQueries
